@@ -71,6 +71,42 @@ def normalize_text(text: Column) -> Column:
     return F.trim(F.regexp_replace(nfc, "[ \t\r\n]+", " "))
 
 
+# --- SQL-text expressions ---------------------------------------------------
+#
+# Every pyspark.sql.functions / Column call is a py4j round trip — with
+# the DataFrame call-site tracking, about ten — so a literal-heavy
+# expression built call by call costs hundreds of round trips of driver
+# time for every plan built. The flagship plan's static expressions are
+# therefore written as SQL text and parsed by ONE ``F.expr`` call per
+# staged column; the parser builds the same expression trees the
+# Column API does (``x IN (...)`` → In, ``CASE`` → CaseWhen, ``a -> e``
+# → LambdaFunction). Literal types are spelled out where SQL would
+# infer another: ``0.15D`` (a bare 0.15 is a DECIMAL), ``CAST(0 AS
+# BIGINT)``.
+
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal: backslashes and quotes are
+    escaped, so a regex pattern reaches the function unchanged."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_num(x: float) -> str:
+    """A Python number as the SQL literal of the type the Column API
+    gives it: an int stays an int (or BIGINT), a float is a DOUBLE."""
+    return repr(x) + "D" if isinstance(x, float) else str(int(x))
+
+
+def sql_ident(name: str) -> str:
+    """A column name as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_list(values) -> str:
+    """Comma-separated SQL string literals, for ``IN (...)`` and
+    ``array(...)``."""
+    return ", ".join(sql_str(v) for v in values)
+
+
 # --- tokenization ----------------------------------------------------------
 
 def ws_tokens(text: Column) -> Column:
@@ -109,6 +145,10 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
+#: CJK unified ideographs, the chars ``cjk_char_count`` counts
+CJK_CLASS = "[一-鿿]"
+
+
 def stopword_hits(text: Column, lang: str = "en") -> Column:
     words = ws_tokens(F.lower(text))
     arr = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
@@ -117,8 +157,11 @@ def stopword_hits(text: Column, lang: str = "en") -> Column:
 
 def cjk_char_count(text: Column) -> Column:
     """Count CJK-unified-ideograph chars (the reference fixtures carry a
-    chinese_chars field computed the same way upstream)."""
-    return F.length(text) - F.length(F.regexp_replace(text, r"[一-鿿]", ""))
+    chinese_chars field computed the same way upstream).  Pure-ASCII
+    text (as many chars as UTF-8 bytes) holds none, so it skips the
+    regex pass: see :func:`_cjk_count_sql`."""
+    count = F.length(text) - F.length(F.regexp_replace(text, CJK_CLASS, ""))
+    return F.when(F.length(text) == F.octet_length(text), F.lit(0)).otherwise(count)
 
 
 def langid_hits_from_tokens(lowered_tokens: Column, lang: str) -> Column:
@@ -140,6 +183,28 @@ def langid_from_hits(
     return F.when(cjk_ratio > 0.15, F.lit("zh")).otherwise(guess)
 
 
+def _cjk_count_sql(text: str) -> str:
+    """:func:`cjk_char_count` as SQL text over the SQL expression
+    ``text``.  The gate is exact: ``length`` counts chars and
+    ``octet_length`` UTF-8 bytes, so they are equal only for pure-ASCII
+    text, which holds no CJK char (null text stays null)."""
+    return (
+        f"CASE WHEN length({text}) = octet_length({text}) THEN 0 "
+        f"ELSE length({text}) - length(regexp_replace({text}, {sql_str(CJK_CLASS)}, '')) END"
+    )
+
+
+def _lang_argmax_sql(hits: dict[str, str]) -> str:
+    """The non-CJK half of :func:`langid_from_hits` as SQL text over SQL
+    hit-count expressions: argmax with earlier languages winning ties,
+    all-zero → 'unk'."""
+    best = f"greatest({', '.join(hits.values())})"
+    guess = "'unk'"
+    for lang in reversed(list(hits)):  # earlier langs win ties
+        guess = f"CASE WHEN {hits[lang]} = {best} THEN {sql_str(lang)} ELSE {guess} END"
+    return f"CASE WHEN {best} <= 0 THEN 'unk' ELSE {guess} END"
+
+
 def langid_heuristic(text: Column) -> Column:
     """Deterministic heuristic language ID (single-expression form —
     fine for one-off use; the pipeline uses with_langid to stage the
@@ -157,21 +222,33 @@ def with_langid(
     lower_tokens_col: str | None = None,
 ):
     """Staged-projection langid: token array materialized once, per-lang
-    hit counts as their own columns, decision from attribute refs.
+    hit counts as their own columns, decision from attribute refs; the
+    same labels as :func:`langid_heuristic`.
 
     ``lower_tokens_col`` lets the caller share an already-staged
     ws_tokens(lower(text)) column (the pipeline stages it once for
     langid AND the quality features — tokenization is the dominant
-    per-row cost, so computing it once matters)."""
-    text = F.col(text_col)
+    per-row cost, so computing it once matters).
+
+    Driver cost: each staged column is SQL text parsed by ONE
+    ``F.expr`` call (see "SQL-text expressions" above). Built through
+    the Column API, the stop-word literals, lambdas and decision tree
+    took ~1,460 py4j round trips per call; as text they take ~50. The
+    independent hit columns share one projection, which leaves the
+    optimized plan unchanged.
+
+    Executor cost: the CJK count skips its regex pass on pure-ASCII
+    text (``_cjk_count_sql``). Docs past the packed path's 32,767-token
+    limit count all languages in one aggregate pass."""
     if lower_tokens_col is None:
-        df = df.withColumn("_li_toks", ws_tokens(F.lower(text)))
-        toks, drop_toks = F.col("_li_toks"), ["_li_toks"]
+        df = df.withColumn("_li_toks", ws_tokens(F.lower(F.col(text_col))))
+        lower_tokens_col, drop_toks = "_li_toks", ["_li_toks"]
     else:
-        toks, drop_toks = F.col(lower_tokens_col), []
+        drop_toks = []
+    text, toks = sql_ident(text_col), sql_ident(lower_tokens_col)
     # ALL per-language hit counts in ONE token pass: each token adds
-    # 1 << (16 * lang_index) to a packed long (isin compiles to an
-    # InSet hash probe), and the counts unpack as 16-bit fields — ~25%
+    # 1 << (16 * lang_index) to a packed long (IN compiles to an InSet
+    # hash probe), and the counts unpack as 16-bit fields — ~25%
     # cheaper than one filter() pass per language (measured 2.9 s vs
     # 3.9 s per 1.2M docs). The fast path is gated to docs with
     # < 32,768 tokens: per-field hit counts then max at 32,767, so no
@@ -182,41 +259,55 @@ def with_langid(
     # branches lazily per row, making the gate itself the protection).
     langs = list(LANG_STOPWORDS)
     assert len(langs) <= 4, "packed langid fields: 4 × 16-bit max in a long"
-
-    def _enc(t):
-        e = F.lit(0).cast("long")
-        for i, lang in enumerate(langs):
-            e = e + F.when(
-                t.isin(*LANG_STOPWORDS[lang]), F.lit(1 << (16 * i)).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        return e
-
-    small = F.size(toks) < 32768
+    zero = "CAST(0 AS BIGINT)"
+    enc = " + ".join(
+        [zero]
+        + [
+            f"CASE WHEN _li_t IN ({sql_list(LANG_STOPWORDS[lang])}) "
+            f"THEN CAST({1 << (16 * i)} AS BIGINT) ELSE {zero} END"
+            for i, lang in enumerate(langs)
+        ]
+    )
+    small = f"size({toks}) < 32768"
     df = df.withColumn(
         "_li_packed",
-        F.when(
-            small,
-            F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + _enc(t)),
-        ).otherwise(F.lit(0).cast("long")),
+        F.expr(
+            f"CASE WHEN {small} THEN aggregate({toks}, {zero}, "
+            f"(_li_acc, _li_t) -> _li_acc + ({enc})) ELSE {zero} END"
+        ),
     )
-    cjk_ratio = cjk_char_count(text) / F.greatest(F.length(text), F.lit(1))
-    # hit counts STAGED as columns: langid_from_hits references each
-    # count several times (greatest + per-lang equality); per-hit CASE
-    # guards here measured +20% on the whole stage, so the size guard
-    # is ONE top-level CASE on the final decision instead — the slow
-    # per-language filter branch only executes for monster docs
-    for i, lang in enumerate(langs):
-        df = df.withColumn(
-            f"_li_h_{lang}",
-            F.shiftright(F.col("_li_packed"), 16 * i).bitwiseAND(F.lit(0xFFFF)),
-        )
-    fast = langid_from_hits(
-        {lang: F.col(f"_li_h_{lang}") for lang in langs}, cjk_ratio
+    # hit counts STAGED as columns: the decision references each count
+    # several times (greatest + per-lang equality); per-hit CASE guards
+    # here measured +20% on the whole stage, so the size guard is ONE
+    # top-level CASE on the final decision instead — the slow
+    # per-language branch only executes for monster docs
+    df = df.withColumns(
+        {
+            f"_li_h_{lang}": F.expr(f"shiftright(_li_packed, {16 * i}) & 65535")
+            for i, lang in enumerate(langs)
+        }
     )
-    slow = langid_from_hits(
-        {lang: langid_hits_from_tokens(toks, lang) for lang in langs}, cjk_ratio
+    # the decision: CJK ratio first (one text scan, either path), then
+    # the packed counts. Monster docs, where the packed long could
+    # overflow, count into an array<int> accumulator and decide in the
+    # aggregate's finish lambda; the coalesce keeps null text (null
+    # tokens) at 'unk', the label per-language counts always gave it
+    cjk_ratio = f"{_cjk_count_sql(text)} / greatest(length({text}), 1)"
+    fast = _lang_argmax_sql({lang: f"_li_h_{lang}" for lang in langs})
+    count = ", ".join(
+        f"_li_c[{i}] + CASE WHEN _li_t IN ({sql_list(LANG_STOPWORDS[lang])}) THEN 1 ELSE 0 END"
+        for i, lang in enumerate(langs)
     )
-    df = df.withColumn(out_col, F.when(small, fast).otherwise(slow))
+    slow = _lang_argmax_sql({lang: f"_li_c[{i}]" for i, lang in enumerate(langs)})
+    zeros = ", ".join("0" for _ in langs)
+    df = df.withColumn(
+        out_col,
+        F.expr(
+            f"CASE WHEN {cjk_ratio} > 0.15D THEN 'zh' WHEN {small} THEN {fast} "
+            f"ELSE coalesce(aggregate({toks}, array({zeros}), "
+            f"(_li_c, _li_t) -> array({count}), _li_c -> {slow}), 'unk') END"
+        ),
+    )
     return df.drop(
         *drop_toks, "_li_packed", *[f"_li_h_{lang}" for lang in langs]
     )

@@ -1109,8 +1109,9 @@ def select_cluster_representatives(
     quality score, longest text, newest snapshot …), not the smallest
     id; min-id (``exact_dedup_groups``/``dedup_clusters``) is only the
     right default when members are byte-identical. Pass e.g.
-    ``[F.col("quality_score").desc(), F.col("doc_id")]`` — always end
-    with a unique tiebreaker so the choice is deterministic.
+    ``[F.col("quality_score").desc()]``; ``id_col`` is appended as the
+    final ordering key, so ties break to the smallest id and the choice
+    is deterministic.
 
     Output: the representative rows plus ``n_members`` (cluster size).
     Scale shape: ONE shuffle on the cluster key + a rank-1 window whose
@@ -1122,7 +1123,7 @@ def select_cluster_representatives(
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(cluster_col).orderBy(*order_cols)
+    w = Window.partitionBy(cluster_col).orderBy(*order_cols, F.col(id_col))
     wc = Window.partitionBy(cluster_col)
     return (
         df.withColumn("_rep_rn", F.row_number().over(w))

@@ -36,6 +36,7 @@ from fineweb_domain_analyzer_spark.functions.domains import (
     extract_domain_udf,
     with_domain_sql,
 )
+from fineweb_domain_analyzer_spark.functions.textfns import sql_ident, sql_str
 
 # Drop-reason enum — unified across robots/quality/lang stages so the
 # lineage histogram (metrics.py) has one vocabulary.
@@ -109,25 +110,28 @@ def path_disallowed(path: Column, disallowed_paths: Column) -> Column:
     return F.exists(paths, lambda p: path.startswith(p))
 
 
-def keep_predicate(url: Column, domain: Column, crawl_allowed: Column) -> Column:
-    """The F5 truth table as one vectorized boolean expression."""
-    no_url = url.isNull() | (url == "")
+def keep_predicate(url: str, domain: str, crawl_allowed: str) -> Column:
+    """The F5 truth table as one vectorized boolean expression over the
+    SQL column references ``url``, ``domain`` and ``crawl_allowed``
+    (one ``F.expr`` parse; see functions/textfns.py, "SQL-text
+    expressions")."""
     # reference line 459: `if domain and ...` — a null OR empty-string
     # domain (urlparse of a scheme-less/invalid url yields netloc '')
     # falls to the excluded branch.
-    has_domain = domain.isNotNull() & (domain != "")
-    return F.when(no_url, F.lit(True)).otherwise(
-        has_domain & F.coalesce(crawl_allowed, F.lit(True))
+    return F.expr(
+        f"CASE WHEN {url} IS NULL OR {url} = '' THEN true "
+        f"ELSE {domain} IS NOT NULL AND {domain} != '' AND coalesce({crawl_allowed}, true) END"
     )
 
 
-def drop_reason(url: Column, domain: Column, crawl_allowed: Column) -> Column:
-    no_url = url.isNull() | (url == "")
-    return (
-        F.when(no_url, F.lit(REASON_KEPT))
-        .when(domain.isNull() | (domain == ""), F.lit(REASON_BAD_URL))
-        .when(~F.coalesce(crawl_allowed, F.lit(True)), F.lit(REASON_ROBOTS_DISALLOWED))
-        .otherwise(F.lit(REASON_KEPT))
+def drop_reason(url: str, domain: str, crawl_allowed: str) -> Column:
+    """The drop-reason enum for the F5 truth table, over SQL column
+    references like :func:`keep_predicate`."""
+    return F.expr(
+        f"CASE WHEN {url} IS NULL OR {url} = '' THEN {sql_str(REASON_KEPT)} "
+        f"WHEN {domain} IS NULL OR {domain} = '' THEN {sql_str(REASON_BAD_URL)} "
+        f"WHEN NOT coalesce({crawl_allowed}, true) THEN {sql_str(REASON_ROBOTS_DISALLOWED)} "
+        f"ELSE {sql_str(REASON_KEPT)} END"
     )
 
 
@@ -155,13 +159,12 @@ def label_pages(
     labeled = join_policy(
         labeled, policy, broadcast_dim=broadcast_dim, include_paths=enforce_paths
     )
-    url = F.col(url_col)
-    dom = F.col("domain")
-    allowed = F.col("_policy_crawl_allowed")
-    keep = keep_predicate(url, dom, allowed)
-    reason = drop_reason(url, dom, allowed)
+    url = sql_ident(url_col)
+    keep = keep_predicate(url, "domain", "_policy_crawl_allowed")
+    reason = drop_reason(url, "domain", "_policy_crawl_allowed")
     drop_cols = ["_policy_crawl_allowed"]
     if enforce_paths:
+        url = F.col(url_col)
         no_url = url.isNull() | (url == "")
         blocked = path_disallowed(url_path(url), F.col("_policy_disallowed_paths"))
         path_dropped = ~no_url & keep & blocked
@@ -170,11 +173,7 @@ def label_pages(
             reason
         )
         drop_cols.append("_policy_disallowed_paths")
-    return (
-        labeled.withColumn("keep", keep)
-        .withColumn("drop_reason", reason)
-        .drop(*drop_cols)
-    )
+    return labeled.withColumns({"keep": keep, "drop_reason": reason}).drop(*drop_cols)
 
 
 def split_kept_excluded(labeled: DataFrame) -> tuple[DataFrame, DataFrame]:

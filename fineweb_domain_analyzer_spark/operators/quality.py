@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import hashlib
 import math
+import operator
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -27,12 +29,19 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType
 
 from fineweb_domain_analyzer_spark.functions.textfns import (
+    sql_ident,
+    sql_list,
+    sql_num,
+    sql_str,
     ws_tokens,
 )
 
 # --- Gopher/C4-style heuristic features (all JVM-side) ----------------------
 
 STOPWORDS_EN = ("the", "be", "to", "of", "and", "that", "have", "with", "a", "in")
+#: runs of what symbol_ratio does NOT count: ASCII letters, digits,
+#: whitespace
+SYMBOL_KEEP_RUNS = r"[A-Za-z0-9\s]+"
 
 
 def with_quality_features(
@@ -56,7 +65,21 @@ def with_quality_features(
     attribute references — CollapseProject keeps multi-referenced
     non-trivial expressions in separate projects, so each codegen
     method stays small and the whole thing still fuses into one map
-    stage.
+    stage. Intermediates referenced only once (the run-break array, the
+    longest run) are written inline: the optimizer would inline them
+    anyway, so staging them only cost plan-building time.
+
+    Driver cost: every column is SQL text parsed by ONE ``F.expr`` call
+    (functions/textfns.py, "SQL-text expressions"); built through the
+    Column API, the stop-word literals and the repeat-run lambdas took
+    ~660 py4j round trips per call, as text ~75. Independent columns
+    share one projection (``withColumns``), which leaves the optimized
+    plan unchanged.
+
+    Executor cost: symbol_ratio deletes RUNS of letters, digits and
+    whitespace (``[A-Za-z0-9\\s]+``) — the same remainder as deleting
+    them one char at a time, with one replacement per run instead of
+    one per char.
 
     Expression notes: the run-break sentinel " " can never equal a
     whitespace-split token (a NUL literal breaks codegen string
@@ -67,13 +90,12 @@ def with_quality_features(
     lambda index; empty text tokenizes to [''] and must not count as a
     run.
     """
-    text = F.col(text_col)
-    drop_cols = ["_qf_n", "_qf_st", "_qf_rb", "_qf_ix", "_qf_maxrun"]
     if lower_tokens_col is None:
-        df = df.withColumn("_qf_lw", ws_tokens(F.lower(text)))
-        lower_tokens_col = "_qf_lw"
-        drop_cols.append("_qf_lw")
-    lw = F.col(lower_tokens_col)
+        df = df.withColumn("_qf_lw", ws_tokens(F.lower(F.col(text_col))))
+        lower_tokens_col, drop_cols = "_qf_lw", ["_qf_lw"]
+    else:
+        drop_cols = []
+    text, lw = sql_ident(text_col), sql_ident(lower_tokens_col)
     # word_count reads the LOWERCASED token array (whitespace-splitting
     # commutes with lower(), so token counts are identical), dropping
     # the original-case tokenize pass; mean_word_len's length sum is
@@ -84,80 +106,77 @@ def with_quality_features(
     # lower()-based sum would break oracle parity on such text.
     # Together ~1s/1.2M docs off the feature stage vs the original
     # tokenize + per-token aggregate.
-    df = df.withColumn(
-        "_qf_n",
-        F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(F.size(lw)),
-    ).withColumn("_qf_st", F.array_sort(lw))
-    df = df.withColumn(
-        "_qf_rb",
-        F.zip_with(
-            F.col("_qf_st"),
-            F.slice(
-                F.concat(F.col("_qf_st"), F.array(F.lit(" "))), 2, F.size("_qf_st")
-            ),
-            lambda a, b: (a != b).cast("int"),
-        ),
+    # sort_array, not array_sort: the same ascending order for tokens
+    # (never null), sorted with a native comparator instead of
+    # array_sort's interpreted comparator lambda
+    df = df.withColumns(
+        {
+            "_qf_n": F.expr(f"CASE WHEN length(trim({text})) = 0 THEN 0 ELSE size({lw}) END"),
+            "_qf_st": F.expr(f"sort_array({lw})"),
+        }
     )
+    # run ends: 1-based positions i where sorted token i differs from
+    # token i+1 (the sentinel closes the last run)
     df = df.withColumn(
         "_qf_ix",
-        F.filter(
-            F.transform(
-                F.col("_qf_rb"),
-                lambda x, i: F.when(x == 1, i + 1).otherwise(F.lit(-1)),
-            ),
-            lambda v: v >= 0,
+        F.expr(
+            "filter(transform(zip_with(_qf_st, slice(concat(_qf_st, array(' ')), 2, "
+            "size(_qf_st)), (_qf_a, _qf_b) -> CAST(_qf_a != _qf_b AS INT)), "
+            "(_qf_x, _qf_i) -> CASE WHEN _qf_x = 1 THEN _qf_i + 1 ELSE -1 END), "
+            "_qf_v -> _qf_v >= 0)"
         ),
     )
-    df = df.withColumn(
-        "_qf_maxrun",
-        F.coalesce(
-            F.array_max(
-                F.transform(
-                    F.col("_qf_ix"),
-                    lambda v, i: v
-                    - F.coalesce(
-                        F.when(i > 0, F.element_at(F.col("_qf_ix"), i.cast("int"))),
-                        F.lit(0),
-                    ),
-                )
-            ),
-            F.lit(0),
-        ),
+    max_run = (
+        "coalesce(array_max(transform(_qf_ix, (_qf_v, _qf_i) -> _qf_v - coalesce("
+        "CASE WHEN _qf_i > 0 THEN element_at(_qf_ix, CAST(_qf_i AS INT)) END, 0))), 0)"
     )
-    n = F.col("_qf_n")
-    n1 = F.greatest(n, F.lit(1))
-    chars = F.greatest(F.length(text), F.lit(1))
-    stop_arr = F.array(*[F.lit(w) for w in STOPWORDS_EN])
-    df = (
-        df.withColumn("word_count", n)
-        .withColumn(
-            "mean_word_len",
-            F.round(
-                F.length(F.regexp_replace(F.trim(text), r"\s+", "")) / n1, 4
+    n1 = "greatest(_qf_n, 1)"
+    ws_run = sql_str(r"\s+")
+    stop = sql_list(STOPWORDS_EN)
+    df = df.withColumns(
+        {
+            "word_count": F.col("_qf_n"),
+            "mean_word_len": F.expr(
+                f"round(length(regexp_replace(trim({text}), {ws_run}, '')) / {n1}, 4)"
             ),
-        )
-        .withColumn(
-            "symbol_ratio",
-            F.round(
-                F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", "")) / chars, 4
+            "symbol_ratio": F.expr(
+                f"round(length(regexp_replace({text}, {sql_str(SYMBOL_KEEP_RUNS)}, '')) "
+                f"/ greatest(length({text}), 1), 4)"
             ),
-        )
-        .withColumn(
-            "stopword_density",
-            F.round(
-                F.size(F.filter(lw, lambda t: F.array_contains(stop_arr, t)))
-                / n1,
-                4,
+            "stopword_density": F.expr(
+                f"round(size(filter({lw}, _qf_t -> array_contains(array({stop}), _qf_t))) "
+                f"/ {n1}, 4)"
             ),
-        )
-        .withColumn(
-            "max_word_repeat_ratio",
-            F.when(n == 0, F.lit(0.0)).otherwise(
-                F.round(F.col("_qf_maxrun") / n1, 4)
+            "max_word_repeat_ratio": F.expr(
+                f"CASE WHEN _qf_n = 0 THEN 0.0D ELSE round({max_run} / {n1}, 4) END"
             ),
-        )
+        }
     )
-    return df.drop(*drop_cols)
+    return df.drop("_qf_n", "_qf_st", "_qf_ix", *drop_cols)
+
+
+def gopher_rules(
+    min_words: int = 50,
+    max_words: int = 100_000,
+    min_mean_word_len: float = 2.0,
+    max_mean_word_len: float = 12.0,
+    max_symbol_ratio: float = 0.2,
+    min_stopword_density: float = 0.0,
+    max_repeat_ratio: float = 0.35,
+) -> list[tuple[str, str, float]]:
+    """The Gopher keep rule as (feature, comparison, threshold) rows
+    over the :func:`with_quality_features` columns; a doc is kept when
+    every row holds.  :func:`gopher_keep` renders it over Columns,
+    :func:`gopher_keep_sql` as SQL text."""
+    return [
+        ("word_count", ">=", min_words),
+        ("word_count", "<=", max_words),
+        ("mean_word_len", ">=", min_mean_word_len),
+        ("mean_word_len", "<=", max_mean_word_len),
+        ("symbol_ratio", "<=", max_symbol_ratio),
+        ("stopword_density", ">=", min_stopword_density),
+        ("max_word_repeat_ratio", "<=", max_repeat_ratio),
+    ]
 
 
 def gopher_keep(
@@ -166,21 +185,29 @@ def gopher_keep(
     symbol_ratio: Column,
     stopword_density: Column,
     max_word_repeat_ratio: Column,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 2.0,
-    max_mean_word_len: float = 12.0,
-    max_symbol_ratio: float = 0.2,
-    min_stopword_density: float = 0.0,
-    max_repeat_ratio: float = 0.35,
+    **thresholds,
 ) -> Column:
-    """Gopher-rule keep decision over the heuristic features."""
-    return (
-        word_count.between(min_words, max_words)
-        & mean_word_len.between(min_mean_word_len, max_mean_word_len)
-        & (symbol_ratio <= max_symbol_ratio)
-        & (stopword_density >= min_stopword_density)
-        & (max_word_repeat_ratio <= max_repeat_ratio)
+    """Gopher-rule keep decision over the heuristic features
+    (``thresholds``: the keyword arguments of :func:`gopher_rules`)."""
+    features = {
+        "word_count": word_count,
+        "mean_word_len": mean_word_len,
+        "symbol_ratio": symbol_ratio,
+        "stopword_density": stopword_density,
+        "max_word_repeat_ratio": max_word_repeat_ratio,
+    }
+    compare = {">=": operator.ge, "<=": operator.le}
+    return reduce(
+        lambda a, b: a & b,
+        [compare[op](features[f], t) for f, op, t in gopher_rules(**thresholds)],
+    )
+
+
+def gopher_keep_sql(**thresholds) -> str:
+    """:func:`gopher_keep` as SQL text over the feature columns by name:
+    one ``F.expr`` parse instead of a Column call per comparison."""
+    return " AND ".join(
+        f"{f} {op} {sql_num(t)}" for f, op, t in gopher_rules(**thresholds)
     )
 
 
@@ -1287,7 +1314,8 @@ def with_doc_shape_features(
                                 rtrim ends with ``...`` or ``…``
                                 (Gopher drops > 0.3)
     * ``alpha_word_frac``     — fraction of words containing at least
-                                one alphabetic char (Gopher keeps ≥ 0.8)
+                                one letter of any script (Gopher keeps
+                                ≥ 0.8)
     * ``hash_word_ratio``     — ``#`` chars per word (Gopher drops > 0.1)
     * ``ellipsis_word_ratio`` — ellipsis occurrences per word
                                 (Gopher drops > 0.1)
@@ -1329,7 +1357,8 @@ def with_doc_shape_features(
     )
     words = F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(F.size(lw))
     w1 = F.greatest(words, F.lit(1))
-    alpha = F.size(F.filter(lw, lambda t: t.rlike("[a-z]")))
+    # \p{L}: a letter of any script, so CJK and accented words count
+    alpha = F.size(F.filter(lw, lambda t: t.rlike(r"\p{L}")))
     hash_cnt = F.length(text) - F.length(F.replace(text, F.lit("#"), F.lit("")))
     ell_cnt = (
         F.length(text) - F.length(F.replace(text, F.lit("..."), F.lit("")))

@@ -30,6 +30,11 @@ from pyspark.sql import functions as F
 from fineweb_domain_analyzer_spark.functions.scrub import scrub_all
 from fineweb_domain_analyzer_spark.functions.textfns import (
     decode_utf8_ignore_udf,
+    sql_list,
+    sql_num,
+    sql_str,
+    with_langid,
+    ws_tokens,
 )
 from fineweb_domain_analyzer_spark.operators.filtering import (
     REASON_BAD_URL,
@@ -38,7 +43,7 @@ from fineweb_domain_analyzer_spark.operators.filtering import (
     label_pages,
 )
 from fineweb_domain_analyzer_spark.operators.quality import (
-    gopher_keep,
+    gopher_keep_sql,
     with_quality_features,
 )
 
@@ -112,47 +117,46 @@ def quality_filter_pipeline(
             "text",
             F.coalesce(
                 F.col("text"),
-                decode_utf8_ignore_udf(
-                    F.when(F.col("text").isNull(), F.col("html"))
-                ),
+                decode_utf8_ignore_udf(F.expr("CASE WHEN text IS NULL THEN html END")),
             ),
         )
     labeled = label_pages(df, policy, exact_domain=cfg.exact_domain)
-    labeled = labeled.withColumnRenamed("keep", "_robots_keep").withColumnRenamed(
-        "drop_reason", "_robots_reason"
+    labeled = labeled.withColumnsRenamed(
+        {"keep": "_robots_keep", "drop_reason": "_robots_reason"}
     )
-    from fineweb_domain_analyzer_spark.functions.textfns import (
-        with_langid,
-        ws_tokens,
-    )
-
     # tokenize+lowercase once; langid and the quality features share the
     # array (regex split is the dominant per-row cost of both stages)
     labeled = labeled.withColumn("_toks_lw", ws_tokens(F.lower(F.col("text"))))
     labeled = with_langid(labeled, lower_tokens_col="_toks_lw")
     labeled = with_quality_features(labeled, lower_tokens_col="_toks_lw")
+    temps = ["_toks_lw", "_robots_keep", "_robots_reason"]
     if cfg.enforce_doc_shape:
         from fineweb_domain_analyzer_spark.operators.quality import (
+            gopher_doc_shape_keep,
             with_doc_shape_features,
         )
 
         labeled = with_doc_shape_features(labeled, lower_tokens_col="_toks_lw")
-    labeled = labeled.drop("_toks_lw")
-    q_keep = gopher_keep(
-        F.col("word_count"),
-        F.col("mean_word_len"),
-        F.col("symbol_ratio"),
-        F.col("stopword_density"),
-        F.col("max_word_repeat_ratio"),
-        min_words=cfg.min_words,
-        max_words=cfg.max_words,
-        max_symbol_ratio=cfg.max_symbol_ratio,
-        max_repeat_ratio=cfg.max_repeat_ratio,
-    )
-    lang_keep = F.col("langid").isin(*cfg.allowed_langs)
-    reason = F.when(
-        F.col("_robots_reason") != REASON_KEPT, F.col("_robots_reason")
-    ).when(~lang_keep, F.lit(REASON_LANGUAGE))
+        # a gate over Columns, staged for the SQL-text CASE below
+        labeled = labeled.withColumn(
+            "_shape_keep",
+            gopher_doc_shape_keep(
+                F.col("bullet_start_frac"),
+                F.col("ellipsis_end_frac"),
+                F.col("alpha_word_frac"),
+                F.col("hash_word_ratio"),
+                F.col("ellipsis_word_ratio"),
+            ),
+        )
+        temps.append("_shape_keep")
+    # drop_reason as ONE CASE in SQL text: one parse instead of a Column
+    # call per branch and literal (langid is never null, so an empty
+    # allow-list is plain false)
+    lang_keep = f"langid IN ({sql_list(cfg.allowed_langs)})" if cfg.allowed_langs else "false"
+    reason = [
+        f"WHEN _robots_reason != {sql_str(REASON_KEPT)} THEN _robots_reason",
+        f"WHEN NOT ({lang_keep}) THEN {sql_str(REASON_LANGUAGE)}",
+    ]
     if cfg.drop_page_types:
         from fineweb_domain_analyzer_spark.operators.pagetype import (
             with_page_type,
@@ -166,43 +170,37 @@ def quality_filter_pipeline(
             rules=cfg.page_type_rules,
             scan_chars=cfg.page_type_scan_chars,
         )
-        reason = reason.when(
-            F.col("page_type").isin(*cfg.drop_page_types),
-            F.lit(REASON_PAGE_TYPE),
+        reason.append(
+            f"WHEN page_type IN ({sql_list(cfg.drop_page_types)}) "
+            f"THEN {sql_str(REASON_PAGE_TYPE)}"
         )
-    reason = reason.when(~q_keep, F.lit(REASON_QUALITY))
+    q_keep = gopher_keep_sql(
+        min_words=cfg.min_words,
+        max_words=cfg.max_words,
+        max_symbol_ratio=cfg.max_symbol_ratio,
+        max_repeat_ratio=cfg.max_repeat_ratio,
+    )
+    reason.append(f"WHEN NOT ({q_keep}) THEN {sql_str(REASON_QUALITY)}")
     if cfg.enforce_doc_shape:
-        from fineweb_domain_analyzer_spark.operators.quality import (
-            gopher_doc_shape_keep,
-        )
-
-        shape_keep = gopher_doc_shape_keep(
-            F.col("bullet_start_frac"),
-            F.col("ellipsis_end_frac"),
-            F.col("alpha_word_frac"),
-            F.col("hash_word_ratio"),
-            F.col("ellipsis_word_ratio"),
-        )
-        reason = reason.when(~shape_keep, F.lit(REASON_DOC_SHAPE))
+        reason.append(f"WHEN NOT _shape_keep THEN {sql_str(REASON_DOC_SHAPE)}")
     if cfg.quality_weights is not None:
         from fineweb_domain_analyzer_spark.operators.quality import (
             with_quality_score,
         )
 
         labeled = with_quality_score(labeled, weights=cfg.quality_weights)
-        clf_keep = F.col("quality_score") >= F.lit(float(cfg.min_quality_score))
         # null score (null text) is NOT classifier-dropped, mirroring
         # the heuristic gates' permissive null semantics
-        reason = reason.when(~clf_keep, F.lit(REASON_CLASSIFIER))
-    reason = reason.otherwise(F.lit(REASON_KEPT))
-    out = (
-        labeled.withColumn("drop_reason", reason)
-        .withColumn("keep", F.col("drop_reason") == REASON_KEPT)
-        .drop("_robots_keep", "_robots_reason")
-    )
+        reason.append(
+            f"WHEN NOT (quality_score >= {sql_num(float(cfg.min_quality_score))}) "
+            f"THEN {sql_str(REASON_CLASSIFIER)}"
+        )
+    reason_sql = f"CASE {' '.join(reason)} ELSE {sql_str(REASON_KEPT)} END"
+    out = labeled.withColumn("drop_reason", F.expr(reason_sql)).drop(*temps)
+    tail = {"keep": F.expr(f"drop_reason = {sql_str(REASON_KEPT)}")}
     if cfg.scrub:
-        out = out.withColumn("scrubbed_text", scrub_all(F.col("text")))
-    return out
+        tail["scrubbed_text"] = scrub_all(F.col("text"))
+    return out.withColumns(tail)
 
 
 def write_pipeline_output(

@@ -5081,7 +5081,7 @@ WITH shape_base AS (
   SELECT doc_id,
          {lines} AS lines,
          {wc} AS words,
-         len(list_filter({TOKS_SQL}, t -> regexp_matches(t, '[a-z]')))
+         len(list_filter({TOKS_SQL}, t -> regexp_matches(t, '\\p{{L}}')))
            AS alpha_words,
          length(text) - length(replace(text, '#', '')) AS hash_cnt,
          (length(text) - length(replace(text, '...', ''))) / 3
@@ -5675,7 +5675,8 @@ keys AS (
   SELECT doc_id,
          CASE WHEN host = '' THEN NULL
               ELSE array_to_string(list_reverse(string_split(host, '.')), ',')
-                   || ')' || (CASE WHEN raw_path = '' THEN '/' ELSE raw_path END)
+                   || ')' || (CASE WHEN starts_with(raw_path, '/') THEN raw_path
+                                   ELSE '/' || raw_path END)
          END AS surt
   FROM parts
 )
@@ -5754,7 +5755,7 @@ FROM ruled
 def q114_best_of_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXTENSION — quality-priority duplicate selection
     (operators/dedup.py:select_cluster_representatives): every third
-    doc gets a degraded near-copy planted (spam tail, id+100000), the
+    doc gets a degraded near-copy planted (spam tail, id + max(id) + 1), the
     cluster key recovers the pairing, and the representative is chosen
     by quality score (desc, doc_id tiebreak) — the 60-token repeated
     tail drives max_word_repeat_ratio high enough that the repetition
@@ -5770,8 +5771,11 @@ def q114_best_of_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    # copies get ids past the largest original id, so no copy collides
+    # with an original and doc_id % off recovers the pairing
+    off = (docs.agg(F.max("doc_id")).collect()[0][0] or 0) + 1
     degraded = docs.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
+        (F.col("doc_id") + off).alias("doc_id"),
         F.concat(
             F.col("text"), F.lit(" spam" * 60)
         ).alias("text"),
@@ -5779,7 +5783,7 @@ def q114_best_of_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = docs.unionAll(degraded)
     scored = with_quality_score(with_quality_features(u))
     reps = select_cluster_representatives(
-        scored.withColumn("cluster", F.col("doc_id") % 100000),
+        scored.withColumn("cluster", F.col("doc_id") % off),
         "cluster",
         [F.col("quality_score").desc(), F.col("doc_id")],
     )
@@ -5794,14 +5798,15 @@ def q114_best_of_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q114_sql() -> str:
     wc = f"CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len({TOKS_SQL}) END"
     return f"""
-WITH u AS (
+WITH off AS (SELECT coalesce(max(doc_id), 0) + 1 AS o FROM documents),
+u AS (
   SELECT doc_id, text FROM documents
   UNION ALL
-  SELECT doc_id + 100000, text || ' spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam'
+  SELECT doc_id + (SELECT o FROM off), text || ' spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam'
   FROM documents WHERE doc_id % 3 = 0
 ),
 feats AS (
-  SELECT doc_id, doc_id % 100000 AS cluster,
+  SELECT doc_id, doc_id % (SELECT o FROM off) AS cluster,
          {wc} AS word_count,
          round(length(regexp_replace(trim(text), '\\s+', '', 'g'))::DOUBLE
                / greatest({wc}, 1), 4) AS mean_word_len,

@@ -758,6 +758,43 @@ class TestClusterRepresentatives:
         }
         assert reps == {1: (10, 2), 2: (20, 2), 3: (30, 1)}
 
+    def test_id_col_breaks_ties(self, spark):
+        """Ties in order_cols go to the smallest id_col, whatever order
+        the rows arrive in."""
+        from pyspark.sql import functions as F
+
+        from fineweb_domain_analyzer_spark.operators.dedup import (
+            select_cluster_representatives,
+        )
+
+        df = spark.createDataFrame(
+            [(1, 12, 0.5), (1, 11, 0.5), (1, 10, 0.5)],
+            "cluster int, doc_id int, score double",
+        ).coalesce(1)
+        reps = select_cluster_representatives(df, "cluster", [F.col("score").desc()])
+        assert [(r["doc_id"], r["n_members"]) for r in reps.collect()] == [(10, 3)]
+
+    def test_q114_ids_at_or_above_100000(self, spark, sf_dir, tmp_path):
+        """Copies are numbered past max(doc_id): an original id of
+        100003 must not collide with the copy of doc 3."""
+        from fineweb_domain_analyzer_spark.queries import q114_best_of_cluster
+
+        texts = [
+            r["text"]
+            for r in spark.read.parquet(str(sf_dir / "documents.parquet"))
+            .orderBy("doc_id")
+            .limit(2)
+            .collect()
+        ]
+        spark.createDataFrame(
+            [(3, texts[0]), (100003, texts[1])], "doc_id bigint, text string"
+        ).write.parquet(str(tmp_path / "documents.parquet"))
+        reps = q114_best_of_cluster(spark, str(tmp_path)).collect()
+        assert sorted((r["cluster"], r["rep_id"], r["n_members"]) for r in reps) == [
+            (3, 3, 2),
+            (100003, 100003, 1),
+        ]
+
     def test_q114_original_always_beats_spam_tail(self, spark):
         from fineweb_domain_analyzer_spark.queries import q114_best_of_cluster
 

@@ -167,6 +167,30 @@ class TestPipelineGate:
         assert not rows["https://a.example.com/1"]["keep"]
         assert rows["https://a.example.com/2"]["drop_reason"] == "kept"
 
+    def test_gate_keeps_zh(self, spark, frames):
+        """alpha_word_frac counts letters of any script, so a zh doc
+        (an allowed language) passes the doc-shape gate."""
+        from fineweb_domain_analyzer_spark.plans.pipeline import (
+            PipelineConfig,
+            quality_filter_pipeline,
+        )
+
+        pages = spark.createDataFrame(
+            [
+                (
+                    "https://a.example.com/zh",
+                    "中文字 data 中文字 text 中文字 more 中文字 words 中文字 here",
+                )
+            ],
+            "url string, text string",
+        )
+        row = quality_filter_pipeline(
+            pages, frames[1], PipelineConfig(scrub=False, enforce_doc_shape=True)
+        ).collect()[0]
+        assert row["langid"] == "zh"
+        assert row["alpha_word_frac"] == 1.0
+        assert row["drop_reason"] == "kept"
+
     def test_gate_stays_one_map_stage(self, frames):
         from fineweb_domain_analyzer_spark.plans.pipeline import (
             PipelineConfig,

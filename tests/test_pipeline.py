@@ -22,6 +22,12 @@ from fineweb_domain_analyzer_spark.sources.pages import (
 )
 
 
+# py4j round trips of one default quality_filter_pipeline call on the
+# pages/policy fixtures below, PySpark 4.1 (3,088 when its static
+# expressions were still built call by call)
+BUILD_CALLS_MEASURED = 544
+
+
 @pytest.fixture(scope="module")
 def pages(spark):
     return synth_pages(spark, n_rows=2000, n_domains=50, seed=7).cache()
@@ -80,6 +86,31 @@ def test_pipeline_columns(pages, policy):
     for col in ("domain", "langid", "word_count", "keep", "drop_reason"):
         assert col in out.columns
     assert "scrubbed_text" not in out.columns
+
+
+def test_plan_build_gateway_round_trips_bounded(spark, pages, policy, monkeypatch):
+    """Building the default flagship plan takes a few hundred py4j
+    round trips (each Column or functions call costs about ten). The
+    bound is 1.5x BUILD_CALLS_MEASURED, so building literal-heavy
+    expressions call by call again — thousands of round trips, ~0.1 ms
+    each — fails here."""
+    from py4j import protocol
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(command, *args, **kwargs):
+        # object releases come from the finalizer, at times of its own
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    quality_filter_pipeline(pages, policy)  # first-call caches (schemas)
+    monkeypatch.setattr(client, "send_command", counting)
+    quality_filter_pipeline(pages, policy)
+    monkeypatch.undo()
+    assert len(calls) <= 1.5 * BUILD_CALLS_MEASURED, len(calls)
 
 
 def test_default_allow_for_uncovered_domains(pages, policy):

@@ -3,21 +3,30 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from fineweb_domain_analyzer_spark.functions.scrub import (
+    DEFAULT_TOXICITY_TERMS,
+    EMAIL_RE,
     EMAIL_TOKEN,
     IP_TOKEN,
+    IPV4_RE,
+    PHONE_RE,
     PHONE_TOKEN,
     TOX_TOKEN,
     scrub_all,
     scrub_pii,
+    toxicity_pattern,
 )
 from fineweb_domain_analyzer_spark.functions.textfns import (
     bpe_ish_token_count,
+    cjk_char_count,
     content_fingerprint,
     exact_fingerprint,
     langid_heuristic,
+    with_langid,
     ws_token_count,
 )
 from fineweb_domain_analyzer_spark.operators.quality import (
@@ -817,3 +826,77 @@ def test_deterministic_shuffle_rejects_bad_shards(spark):
     docs = spark.range(3).withColumnRenamed("id", "doc_id")
     with _pytest.raises(ValueError):
         deterministic_shuffle(docs, seed=1, n_shards=0)
+
+
+# --- gated passes == ungated references ---------------------------------------
+
+# Pieces that make every gate fire and miss: '@', '.', digits, phone
+# separators, toxicity terms (and near misses a metacharacter term
+# matches), the <IP> token text, \x0B, non-ASCII, CJK.
+_GATE_PIECES = [
+    "a@b.co", "x.y@ex-ample.org", "@", ".", "1.2.3.4", "255.255.255.255",
+    "10.0.0", "(860) 649-7922", "860-649-7922", "860.649.7922", "123 456",
+    "badword1", "badword2", "slur1", "xbadword1", "bad", "bid", "b.d",
+    "IP", "the", "中文", "字", "一", "鿿", "é", "ß", "\x0b", "\t", "\n",
+    " ", "  ", "#", "…", "привет", "ＡＢ", "z", "42", "-", "_", "%", "+",
+    " ", "\U0001f600",
+]
+_gate_text = st.lists(
+    st.one_of(
+        st.sampled_from(_GATE_PIECES),
+        st.text(alphabet="@.0123456789 -()ab\x0b中é", max_size=4),
+    ),
+    max_size=16,
+).map("".join)
+
+
+def _scrub_ungated(text, terms=DEFAULT_TOXICITY_TERMS):
+    out = F.regexp_replace(text, EMAIL_RE, EMAIL_TOKEN)
+    out = F.regexp_replace(out, PHONE_RE, PHONE_TOKEN)
+    out = F.regexp_replace(out, IPV4_RE, IP_TOKEN)
+    return F.regexp_replace(out, toxicity_pattern(terms), TOX_TOKEN)
+
+
+@settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(st.lists(st.one_of(st.none(), _gate_text), min_size=1, max_size=24))
+def test_gated_passes_match_ungated(spark, texts):
+    """scrub_all, cjk_char_count, symbol_ratio and with_langid skip
+    regex passes that cannot match; the results must equal the ungated
+    expressions."""
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    t = F.col("text")
+    cases = {
+        "scrub": (scrub_all(t), _scrub_ungated(t)),
+        # literal terms: gated, on the PII-scrubbed text ('IP' sits in <IP>)
+        "scrub_ip": (scrub_all(t, ("IP", "slur1")), _scrub_ungated(t, ("IP", "slur1"))),
+        # a metacharacter term ('b.d' matches 'bid') must skip the gate
+        "scrub_meta": (scrub_all(t, ("b.d", "badword1")), _scrub_ungated(t, ("b.d", "badword1"))),
+        "cjk": (
+            cjk_char_count(t),
+            F.length(t) - F.length(F.regexp_replace(t, "[一-鿿]", "")),
+        ),
+    }
+    cols = []
+    for name, (gated, ref) in cases.items():
+        cols += [gated.alias(name), ref.alias(f"{name}_ref")]
+    symbol_ref = F.round(
+        F.length(F.regexp_replace(t, r"[A-Za-z0-9\s]", "")) / F.greatest(F.length(t), F.lit(1)),
+        4,
+    )
+    # with_langid's SQL-text CJK gate and decision against the
+    # Column-built single-expression form
+    rows = with_langid(with_quality_features(df)).select(
+        *cols,
+        F.col("symbol_ratio"),
+        symbol_ref.alias("symbol_ratio_ref"),
+        F.col("langid"),
+        langid_heuristic(t).alias("langid_ref"),
+    ).collect()
+    for r in rows:
+        for name in [*cases, "symbol_ratio", "langid"]:
+            assert r[name] == r[f"{name}_ref"], (name, r)
+
+
+def test_metacharacter_term_is_not_gated(spark):
+    out = _one(spark, "a bid here").select(scrub_all(F.col("text"), ("b.d",)).alias("s"))
+    assert out.collect()[0]["s"] == "a <TOX> here"

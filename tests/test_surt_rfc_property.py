@@ -37,8 +37,8 @@ def surt_py(url: str | None) -> str | None:
         return None
     rest = url[m.end() :]
     path = rest.split("#")[0]
-    if path == "":
-        path = "/"
+    if not path.startswith("/"):
+        path = "/" + path
     return ",".join(reversed(host.split("."))) + ")" + path
 
 
@@ -69,6 +69,12 @@ url_strategy = st.one_of(
         st.sampled_from(["", "#frag", "#x/y"]),
     ),
     st.builds(lambda h: f"http://{h}", host),
+    # query or fragment with no path
+    st.builds(
+        lambda h, rest: f"https://{h}{rest}",
+        host,
+        st.sampled_from(["?q=1", "?a=b&c=d", "#frag", "?q=1#f"]),
+    ),
     st.sampled_from(["", "not-a-url", "ftp://x.y/z", "https:///nohost"]),
 )
 

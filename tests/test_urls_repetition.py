@@ -263,6 +263,7 @@ class TestSurtKey:
             ("https://sub.example.com:8080/a/b?q=1", "com,example,sub)/a/b?q=1"),
             ("http://WWW.Example.COM", "com,example,www)/"),
             ("https://example.com/x#frag", "com,example)/x"),
+            ("https://example.com?q=1", "com,example)/?q=1"),
             ("https://localhost/p", "localhost)/p"),
             ("not-a-url", None),
             ("", None),
